@@ -365,9 +365,10 @@ object Bench {
     // boost state RAMPS under the full suite, so a same-code capture's
     // post anchors read ~0.28-0.34 → ~0.20 s faster than its pre
     // anchors on a GENUINELY QUIET host — the within-run gate refused
-    // 4 of 6 clean r15 captures, and AnchorCurve refuted the warm-up
-    // fix (a fresh JVM plateaus at ~0.27-0.29 s; ~90 s of diverse
-    // warm-up jobs never reaches the post-suite fast state). The sound
+    // 4 of 6 clean r15 captures, and a fresh-JVM anchor curve refuted
+    // the warm-up fix (docs/THROUGHPUT.md: a fresh JVM plateaus at
+    // ~0.27-0.29 s; ~90 s of diverse warm-up jobs never reaches the
+    // post-suite fast state). The sound
     // start-state comparison is LIKE-STATE vs LIKE-STATE across
     // captures: this run's PRE anchors (fresh-JVM, pre-ramp) against
     // the previous artifact's PRE anchors. Band stays 1.25×; the old

@@ -779,10 +779,7 @@ object SparkEntry {
     * query stays ONE submitted plan; at 100 TB the old form paid an
     * extra full-column scan job per invocation just to learn the split
     * point. */
-  // private[graft]: ScaleSmoke's incremental ops must split on the
-  // SAME boundary convention as the declared queries and the DuckDB
-  // oracle's `MAX(id) // 2` CTE — one definition, not three copies
-  private[graft] def halvesByMaxId(df: DataFrame, idCol: String): (DataFrame, DataFrame) = {
+  private def halvesByMaxId(df: DataFrame, idCol: String): (DataFrame, DataFrame) = {
     val half = df.agg(expr(s"max($idCol) div 2").as("__half"))
     val withH = df.crossJoin(broadcast(half))
     (withH.filter(col(idCol) > col("__half")).drop("__half"),
@@ -795,7 +792,7 @@ object SparkEntry {
     * a 10% arriving batch against a 90% standing lake is the shape
     * that op exists for (the 50/50 split is its broadcast sibling's
     * stress shape; at 50% "batch" the honest answer is a recompute). */
-  private[graft] def splitByMaxIdFrac(df: DataFrame, idCol: String,
+  private def splitByMaxIdFrac(df: DataFrame, idCol: String,
       num: Int, den: Int): (DataFrame, DataFrame) = {
     val cut = df.agg(expr(s"(max($idCol) * $num) div $den").as("__cut"))
     val withC = df.crossJoin(broadcast(cut))

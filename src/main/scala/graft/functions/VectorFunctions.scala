@@ -131,20 +131,11 @@ object VectorFunctions {
       (sqrt(normSqQuantized(a, scale).cast("double")) *
         sqrt(normSqQuantized(b, scale).cast("double")))
 
-  /** Random-hyperplane LSH bucket: `planes(p)(d)` is a small driver-side
-    * matrix (numPlanes × dim) broadcast as a literal; bit p of the bucket
-    * is the sign of plane_p · v. 2^numPlanes buckets. */
-  def hyperplaneBucket(v: Column, planes: Array[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (plane, p) =>
-      val planeCol = array(plane.map(lit): _*)
-      when(aggregate(zip_with(planeCol, v, (x, y) => x * y.cast("double")),
-        lit(0.0), (acc, x) => acc + x) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** [[hyperplaneBucket]] with integer-quantized planes and vector: bit
-    * p = sign of Σ w_pd · floor(v_d·scale), an EXACT integer — the
-    * bucket assignment is reproducible by any engine regardless of float
-    * summation order. |w| ≤ ~5000, |floor(v·1000)| ≤ ~10^3·|v|, so 64-dim
+  /** Random-hyperplane LSH bucket with integer-quantized planes and
+    * vector: `planes` is a small driver-side matrix (numPlanes × dim)
+    * broadcast as a literal; bit p = sign of Σ w_pd · floor(v_d·scale),
+    * an EXACT integer — the bucket assignment is reproducible by any
+    * engine regardless of float summation order. |w| ≤ ~5000, |floor(v·1000)| ≤ ~10^3·|v|, so 64-dim
     * sums sit far below 2^63. Served by the native [[SrpCodeWords]]
     * kernel (one vector pass for every plane, codegen'd) — the
     * portable per-plane zip_with/aggregate chain it replaced paid 2

@@ -70,7 +70,8 @@ object Dedup {
     * on the frequency-weighted fingerprint, not for token-SET Jaccard:
     * two docs with J = 0.9 but different term frequencies can sit far
     * apart in simhash space. On the sf0.1 rep graph (4266 reps, 26 885
-    * true J ≥ 0.9 pairs; `graft.HybridProbe`): k = 4 misses 22 858 of
+    * true J ≥ 0.9 pairs; round-5 measurement, its `HybridProbe` main
+    * is in git history): k = 4 misses 22 858 of
     * the true pairs (85%), k = 12 still misses 606, and the first
     * full-recall width is k = 20 — where the 3-bit bands emit 61.9 M
     * candidates, 2300× the true pair count, so the verify stage alone
@@ -174,7 +175,8 @@ object Dedup {
     * corpus (junk pairs at J≈0.3 collide a band at J²≈0.09 vs
     * J⁴≈0.008) — recall insurance priced in candidate verify work. The index at
     * `bandIndexPath` must have been saved with the SAME
-    * (numHashes, bands).
+    * (numHashes, bands), and must exist: a missing index raises
+    * `IllegalArgumentException`, as in [[dedupAgainstCorpusLshIndexed]].
     *
     * HOT-BAND BOUND (r18, the r17 verdict #1 — the classic LSH
     * hot-key blowup): without a cap, one degenerate band fingerprint
@@ -202,8 +204,7 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame, corpus: DataFrame, bandIndexPath: String,
       thresholdTenths: Int, numHashes: Int = 32,
-      bands: Int = 8, maxBandPostings: Long = 100000L,
-      skinnyVerify: Boolean = false): DataFrame = {
+      bands: Int = 8, maxBandPostings: Long = 100000L): DataFrame = {
     val t = thresholdTenths
     val width = bandPfxWidthOf(spark, bandIndexPath)
     val qb = lshBandFpRows(minhashSignatures(batch, numHashes),
@@ -249,37 +250,17 @@ object Dedup {
       .filter(col("inter") * 10 >= col("uni") * t)
       .select(col("d1"), col("d2"), col("inter"), col("uni"),
         (col("inter").cast("double") / col("uni")).as("jaccard"))
-    if (!skinnyVerify) {
-      // single-pass verify: arrays attach once, lang/length filters
-      // evaluate before the intersect kernel (Catalyst keeps the
-      // predicate order), each relation consumed exactly once
-      verdict(cand.join(b0, "d1").join(c0, "d2")
-        // lang blocking, as the exact tier's join-on-lang enforces
-        .filter(col("lang") === col("lang2"))
-        .filter(col("n1") * t <= col("n2") * 10 &&
-          col("n2") * t <= col("n1") * 10))
-    } else {
-      // SKINNY-FIRST probe shape (guide §2.3/§8: decide with small
-      // rows, attach arrays only to lang/length survivors; arrays pin
-      // because both passes consume them). MEASURED NOT PAYING on the
-      // fixture (`OpsScaleProbe banded`): the self-similar corpus
-      // passes most candidates through the lang/length prune, so the
-      // second pass re-pays the pair join for no byte savings. Kept as
-      // the probe-selectable shape because its win condition —
-      // length-heterogeneous corpora where the prune is selective —
-      // is the 100 TB crawl shape, and the accounting (keep vs cand
-      // counts) is what sizes that decision.
-      val b = b0.localCheckpoint(eager = false)
-      val c = c0.localCheckpoint(eager = false)
-      val keep = cand
-        .join(b.select(col("d1"), col("lang"), col("n1")), "d1")
-        .join(c.select(col("d2"), col("lang2"), col("n2")), "d2")
-        .filter(col("lang") === col("lang2"))
-        .filter(col("n1") * t <= col("n2") * 10 &&
-          col("n2") * t <= col("n1") * 10)
-        .select("d1", "d2")
-      verdict(keep.join(b, "d1").join(c, "d2"))
-    }
+    // single-pass verify: arrays attach once, lang/length filters
+    // evaluate before the intersect kernel (Catalyst keeps the
+    // predicate order), each relation consumed exactly once. A
+    // skinny-first shape (attach arrays only to lang/length survivors)
+    // measured a tie on the self-similar fixture, whose candidates
+    // mostly pass that prune (OPTIMIZATION_r19.md item 5b).
+    verdict(cand.join(b0, "d1").join(c0, "d2")
+      // lang blocking, as the exact tier's join-on-lang enforces
+      .filter(col("lang") === col("lang2"))
+      .filter(col("n1") * t <= col("n2") * 10 &&
+        col("n2") * t <= col("n1") * 10))
   }
 
   /** The skip ACCOUNTING for [[jaccardPairsAgainstCorpusBanded]]'s
@@ -872,8 +853,7 @@ object Dedup {
     *     e.g. incremental batches with few dups against a huge gram
     *     universe. */
   private[graft] def jaccardPairsOf(tok: DataFrame, thresholdTenths: Int,
-                             rankByFrequency: Boolean = true,
-                             pinDocTokens: Boolean = false): DataFrame = {
+                             rankByFrequency: Boolean = true): DataFrame = {
     val t = thresholdTenths
     // (r18 optimization round: a lazy localCheckpoint of `tok` was
     // measured here and REJECTED — the postings relation is cheap to
@@ -883,21 +863,18 @@ object Dedup {
     // word tier flat-to-worse. The win of that shape belongs to
     // SMALL-after-expensive relations.
     // r19 re-measured the AGGREGATED docTokens relation the same way
-    // and it is ALSO REJECTED on the declared input shape —
-    // `OpsScaleProbe pairspin`, one JVM, min-of-2 over the raw parquet
-    // scan: word tier 2.77 s both ways, ngram tier 2.80 → 4.15 s
-    // pinned. The pin only wins when the INPUT relation is itself a
-    // materialized checkpoint (word tier 5.74 → 2.66 s on a
-    // checkpointed docs input, where every re-run re-reads the
-    // checkpoint's collapsed partitioning) — the declared queries scan
-    // parquet, so the knob stays off and is kept for the probe.)
+    // and it is ALSO REJECTED on the declared input shape (one JVM,
+    // min-of-2 over the raw parquet scan, OPTIMIZATION_r19.md item 4):
+    // word tier 2.77 s both ways, ngram tier 2.80 → 4.15 s pinned. The
+    // pin only wins when the INPUT relation is itself a materialized
+    // checkpoint (word tier 5.74 → 2.66 s on a checkpointed docs input,
+    // where every re-run re-reads the checkpoint's collapsed
+    // partitioning) — the declared queries scan parquet, so it stays
+    // unpinned.)
     // Per-doc SORTED id arrays + counts (verification side): sorted so
     // the verify kernel is a linear primitive merge, not a hash probe.
-    val docTokens0 = tok.groupBy("doc_id", "lang")
+    val docTokens = tok.groupBy("doc_id", "lang")
       .agg(sort_array(collect_list(col("tid"))).as("toks"), count(lit(1)).as("n"))
-    val docTokens =
-      if (pinDocTokens) docTokens0.localCheckpoint(eager = false)
-      else docTokens0
     // prefix length = n − ⌈t·n⌉ + 1  (integer ceil: (t·n + 9) div 10)
     val prefixLen = col("n") - ((col("n") * t + 9) / 10).cast("long") + 1
     val prefix = if (rankByFrequency) {
@@ -985,8 +962,8 @@ object Dedup {
     * grows SLOWER than measured candidate volume. The cost rides the
     * 4.2 M-candidate / 2.1 M-output volume: inherent pair-emission
     * work, not a plan defect. */
-  /** The (lang, distinct-token-bag) class quotient shared by
-    * [[containmentPairs]] and [[containmentCandidates]]: returns
+  /** The (lang, distinct-token-bag) class quotient of
+    * [[containmentPairs]]: returns
     * `(members, repDocs)` — every doc with its class key + rep, and the
     * representative docs rejoined to the input relation. */
   private def bagQuotient(docs: DataFrame): (DataFrame, DataFrame) = {
@@ -1066,9 +1043,8 @@ object Dedup {
   }
 
   /** Token relation + candidate generation of the representative-level
-    * containment computation: returns `(docTokens, candidates)` so the
-    * verify stage and the candidate-volume measurement share one
-    * definition. */
+    * containment computation: returns `(docTokens, candidates)`, the
+    * two inputs of the prefix path's verify stage. */
   private def containmentCandidatesOf(docs: DataFrame,
                                       thresholdTenths: Int): (DataFrame, DataFrame) = {
     val t = thresholdTenths
@@ -1105,28 +1081,6 @@ object Dedup {
           col("p.doc_id") =!= col("f.doc_id"))
       .select(col("p.doc_id").as("d1"), col("f.doc_id").as("d2"))
     (docTokens, raw.distinct())
-  }
-
-  /** Representative-level candidate (d1, d2) relation of
-    * [[containmentPairs]] — post-quotient, pre-verify — exposed so
-    * scale smokes MEASURE candidate volume against wall time instead
-    * of arguing the ratio from the output bound. Follows the
-    * auto-switch: the prefix-filtered relation when the prefix path is
-    * selected, all ordered same-lang rep pairs when the brute verify
-    * is (that IS the pre-verify candidate set the query scores). */
-  def containmentCandidates(docs: DataFrame, thresholdTenths: Int): DataFrame = {
-    val (_, repDocs) = bagQuotient(docs)
-    if (containmentBruteWins(docs, thresholdTenths)) {
-      val (_, docTokens) = containmentTokenRels(repDocs)
-      docTokens.select(col("lang"), col("doc_id").as("d1"))
-        // probe-side spread, as the brute verify (see containmentPairsOf)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism,
-          col("d1"))
-        .join(broadcast(docTokens.select(col("lang"),
-          col("doc_id").as("d2"))), "lang")
-        .filter(col("d1") =!= col("d2"))
-        .select("d1", "d2")
-    } else containmentCandidatesOf(repDocs, thresholdTenths)._2
   }
 
   /** Broadcast-safety bound for [[containmentBruteWins]]: the brute
@@ -1192,8 +1146,7 @@ object Dedup {
     * the decision needs memo-stable plans, which the checkpointed rep
     * relation this method receives cannot key). */
   private[graft] def containmentPairsOf(docs: DataFrame, thresholdTenths: Int,
-                                 bruteVerify: Boolean = false,
-                                 spreadProbe: Boolean = true): DataFrame = {
+                                 bruteVerify: Boolean = false): DataFrame = {
     val t = thresholdTenths
     if (bruteVerify) {
       // all ordered same-lang rep pairs, arrays INLINE in the join (a
@@ -1212,11 +1165,12 @@ object Dedup {
       // intersect fan-out (9.1 M pairs at sf0.1), not the input size
       // — so the whole verify ran on one core. Explicit count
       // disables AQE's byte-based coalescing, exactly as the prefix
-      // path already does for its candidate fan-out. `spreadProbe`
-      // false is the probe's A/B knob (`OpsScaleProbe containment`).
-      (if (spreadProbe) probeSide.repartition(
-          docs.sparkSession.sparkContext.defaultParallelism, col("d1"))
-       else probeSide)
+      // path already does for its candidate fan-out. Measured in one
+      // JVM on identical outputs: verify 2.22 s unspread → 0.98 s
+      // (OPTIMIZATION_r19.md item 7).
+      probeSide
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+          col("d1"))
         .join(broadcast(docTokens.select(col("lang"),
           col("doc_id").as("d2"), col("toks").as("toks2"))), "lang")
         .filter(col("d1") =!= col("d2"))
@@ -1629,9 +1583,17 @@ object Dedup {
     * native exact signature-overlap kernel — `max_matches` of
     * `numHashes` minhashes agreeing, the same estimate the batch LSH
     * tier thresholds. Per batch doc: candidate count, best overlap,
-    * twin count at `minMatches`, and the keep verdict (no candidate ⇒
-    * fail open, novel content must survive). Corpus vectors of the
-    * lake: signatures only — the index IS the serving relation.
+    * twin count at `minMatches`, and the keep verdict (a batch doc
+    * with no candidate is kept: novel content must survive). Corpus
+    * vectors of the lake: signatures only — the index IS the serving
+    * relation.
+    *
+    * FIRST SERVE: a band index saved by [[saveLshBandIndex]] must exist
+    * before the first serve. A missing index raises
+    * `IllegalArgumentException` at declaration ([[bandPfxWidthOf]]);
+    * it is not read as an empty lake that keeps every batch doc, so a
+    * mistyped path cannot pass a whole batch through undeduplicated.
+    * Bootstrap a fresh lake by saving its first batch as the index.
     *
     * REGIME RULE (the `buildShards` contract, one module over): a
     * point/small-batch probe broadcast-joins — the batch's band rows

@@ -71,9 +71,6 @@ object LakeMaintenance {
     ()
   }
 
-  /** Test hook: forget every memoized schema. */
-  private[graft] def clearSchemaMemo(): Unit = schemaMemo.clear()
-
   /** Compact with the partition column read back as its INFERRED type
     * — correct when the written values are genuinely numeric (the PQ
     * index's `cell`). String-valued partition columns that can LOOK

@@ -251,7 +251,9 @@ object Multimodal {
 
   /** The candidate stage of [[mediaNearDupPairs]] — banded phash
     * equi-join + Hamming verify, before the histogram cosine verdict
-    * (the ScaleSmoke `cand` decomposition surface). */
+    * (split out so the candidate stage can be timed on its own; the
+    * `media_near_dup` rows of SCALESMOKE_r*.json hold its measured
+    * decomposition). */
   private[graft] def mediaNearDupCandidates(fps: DataFrame,
                                             maxDistance: Int): DataFrame = {
     val banded = bandedPhash(fps, maxDistance)

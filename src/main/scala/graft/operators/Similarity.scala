@@ -680,17 +680,6 @@ object Similarity {
     a.join(b, "cluster").filter(col("id_a") < col("id_b"))
   }
 
-  /** [[semDedupAgainstCorpus]]'s pre-verdict candidate relation — every
-    * same-cluster batch×corpus pair the verdict dot must score. */
-  def semDedupIncrementalCandidates(spark: SparkSession, batch: DataFrame,
-                                    corpus: DataFrame,
-                                    dim: Int = 64): DataFrame = {
-    val book = coarseBook(spark, corpus, dim)
-    assignToBook(batch, book).select(col("vec_id"), col("cluster"))
-      .join(assignToBook(corpus, book)
-        .select(col("vec_id").as("id_c"), col("cluster")), "cluster")
-  }
-
   /** Assignment + update against a `(cluster, cq: array<long>)`
     * codebook (shared body of the Lloyd rounds). */
   private def lloydStep(emb: DataFrame, cq: DataFrame,

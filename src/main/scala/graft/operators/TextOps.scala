@@ -693,10 +693,10 @@ object TextOps {
     * the vector broadcast; shuffle-hash-join the pair relation on
     * d1/d2 when even that overflows).
     *
-    * Plan shape (SPLIT-DOT completion — the r13 ScaleSmoke perturbed
-    * leg measured the naive whole-vector completion at 19.7× for a
-    * ×10 corpus: a full pair `distinct` shuffle plus |pairs|·k
-    * completion rows; this shape removed both): postings counts are
+    * Plan shape (SPLIT-DOT completion — the r13 scale smoke's perturbed
+    * leg (docs/PLANS.md) measured the naive whole-vector completion at
+    * 19.7× for a ×10 corpus: a full pair `distinct` shuffle plus
+    * |pairs|·k completion rows; this shape removed both): postings counts are
     * k·N-row aggregation output (salient-vocab-sized, broadcast);
     * generation reuses the broadcast candidate join over the
     * CEILING-FILTERED vectors, and its joined rows ARE the
@@ -1435,17 +1435,6 @@ object TextOps {
     batch.select(col("doc_id"), tokenCount(col("text")).as("dl"))
       .write.mode("append").parquet(s"$path/doclen")
   }
-
-  /** Compact a persisted lexical index's postings back to one file per
-    * token-prefix partition — the small-files bound
-    * [[appendToLexicalIndex]] needs, via the shared
-    * [[LakeMaintenance.compactPartitionedString]] contract (rows
-    * unchanged; the string-forced read keeps an all-digit prefix set
-    * from flipping the partition column to integer). */
-  def compactLexicalIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit =
-    LakeMaintenance.compactPartitionedString(spark, s"$path/postings",
-      "tok_pfx")
 
   /** Recompute the lexical index's one-row stats from its doclen
     * relation — the post-append refresh that makes

@@ -392,19 +392,6 @@ object EventStream {
         "event_type STRING, value DOUBLE, props STRING")
       .parquet(dir)
 
-  /** Sink helper: append to parquet with checkpointing (exactly-once
-    * file sink). Returns the query handle — callers must
-    * awaitTermination/stop it (dropping it races driver shutdown against
-    * the first micro-batch commit). */
-  def writeParquetStream(df: DataFrame, outDir: String,
-                         checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
-
   /** Streaming ingest into a MANIFEST-TRACKED lake — the stream twin
     * of [[graft.operators.Layout.appendWithManifest]] (r16, the r15
     * verdict #7: the one lake-lifecycle op without a stream sibling;

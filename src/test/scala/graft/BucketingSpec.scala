@@ -611,6 +611,18 @@ class BucketingSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Dedup.bandPfxWidthOf(spark, s"$base/nope")
     }
+    // the serve entry points inherit it: a first ingest before any
+    // saveLshBandIndex fails at declaration, it does not keep everything
+    val docs = Seq((1L, "en", "alpha beta gamma delta"))
+      .toDF("doc_id", "lang", "text")
+    intercept[IllegalArgumentException] {
+      Dedup.dedupAgainstCorpusLshIndexed(spark, docs, s"$base/nope",
+        minMatches = 32)
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.jaccardPairsAgainstCorpusBanded(spark, docs, docs,
+        s"$base/nope", thresholdTenths = 9)
+    }
     val mixed = s"$base/mixed"
     Seq(("0", 1L)).toDF("fp_pfx", "doc_id")
       .write.partitionBy("fp_pfx").parquet(s"$mixed/bands")

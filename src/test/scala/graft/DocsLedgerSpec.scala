@@ -52,4 +52,25 @@ class DocsLedgerSpec extends AnyFunSuite {
     assert(claim.get.group(1).toInt === testCount,
       s"README claims ${claim.get.group(1)} tests; census counts $testCount")
   }
+
+  test("the only mains under src/main are Bench, Cli, Explain and Verify") {
+    // measurement lives in perfbench/; a one-shot probe main is a
+    // second, untested measurement path, so none may grow back. Each
+    // entry point is attributed to the last object declared before it.
+    val objectDecl = raw"\bobject\s+(\w+)".r
+    val entry = raw"\bdef\s+main\s*\(|\bextends\s+App\b".r
+    val mains = Files.walk(Paths.get("src/main/scala"))
+      .iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val src = Files.readString(p)
+        val objects = objectDecl.findAllMatchIn(src)
+          .map(m => m.start -> m.group(1)).toSeq
+        entry.findAllMatchIn(src).map(e =>
+          objects.filter(_._1 < e.start).lastOption
+            .fold(s"<main outside an object in $p>")(_._2))
+      }
+      .toSet
+    assert(mains === Set("Bench", "Cli", "Explain", "Verify"))
+  }
 }
